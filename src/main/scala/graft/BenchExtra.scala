@@ -30,9 +30,32 @@ object BenchExtra {
     else 0L
   }
 
+  /** `[reps] [query...]` → (reps, queries), or a usage error. A leading
+    * integer (or empty) argument is the rep count; every other argument
+    * must name a query in [[SparkEntry.queries]].
+    */
+  private[graft] def parseArgs(args: Seq[String],
+      known: Set[String]): Either[String, (Int, Seq[String])] = {
+    val (repArg, wanted) = args match {
+      case h +: t if h.isEmpty || h.toIntOption.isDefined => (h.toIntOption, t)
+      case _ => (None, args)
+    }
+    val reps = repArg.getOrElse(2)
+    val unknown = wanted.filterNot(known.contains)
+    if (reps < 1) Left(s"rep count must be positive, got $reps")
+    else if (unknown.nonEmpty)
+      Left(s"unknown queries: ${unknown.mkString(", ")}; valid: " +
+        known.toSeq.sorted.mkString(", "))
+    else Right((reps, wanted))
+  }
+
   def main(args: Array[String]): Unit = {
-    val reps = args.headOption.filter(_.forall(_.isDigit)).map(_.toInt).getOrElse(2)
-    val wanted = args.dropWhile(_.forall(_.isDigit))
+    val (reps, wanted) = parseArgs(args.toSeq, SparkEntry.queries.keySet) match {
+      case Right(parsed) => parsed
+      case Left(err) =>
+        System.err.println(s"BenchExtra: $err")
+        sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -46,7 +69,7 @@ object BenchExtra {
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("count(xxhash64(id))").collect()
     val names =
-      if (wanted.nonEmpty) wanted.toSeq
+      if (wanted.nonEmpty) wanted
       else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -104,6 +104,19 @@ object RollupJob {
       case None => turnsRead
     }
 
+    // committed (tier, pday) partitions, read ONCE per run into a driver
+    // set (bounded by tiers × pdays ever committed — lineage is never
+    // pruned): planned output is filtered with `pday IN (...)` predicates
+    // and wmode 'a' takes its high-water mark from the same read
+    val resume = cfg.writeMode == "s" || cfg.writeMode == "a"
+    val committed =
+      if (resume) Checkpoint.committedSet(spark, io, cfg.outputRoot)
+      else Set.empty[(String, String)]
+    def pending(df: DataFrame, tier: String): DataFrame = {
+      val done = committed.collect { case (`tier`, d) => d }.toSeq.sorted
+      if (done.isEmpty) df else df.filter(!col("pday").isin(done: _*))
+    }
+
     // ---- wmode 'a': prune input below the committed high-water mark.
     // The predicate compares ts DIRECTLY against a timestamp literal (start
     // of the day after the high-water pday, UTC — pdays are UTC day strings)
@@ -112,193 +125,187 @@ object RollupJob {
     // a full rescan of the raw table on every append run (PlanAuditSpec
     // asserts the pushdown).
     val turns = if (cfg.writeMode == "a") {
-      val hw = Checkpoint.highWater(spark, io, cfg.outputRoot)
-      hw.values.minOption match {
+      Checkpoint.highWater(committed).values.minOption match {
         case Some(minHw) =>
           turnsAll.filter(appendPredicate(inputDf.schema("ts").dataType, minHw))
         case None => turnsAll
       }
     } else turnsAll
 
-    // committed (tier, pday) partitions — anti-joined against planned
-    // output (J3; broadcast: partition count is tiny relative to data)
-    val resume = cfg.writeMode == "s" || cfg.writeMode == "a"
-    val committed: DataFrame =
-      if (resume) Checkpoint.committed(spark, io, cfg.outputRoot).cache()
-      else spark.emptyDataFrame
-
     val fingerprint = s"${cfg.inputPath}@${cfg.runId}"
     val sorted = cfg.tiers.sortBy(_.bucketSec)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration.Duration
 
-    // ---- segments (the pivot) at the coarsest tier: long segments amortize
-    // per-segment encode cost; memory stays bounded via maxPointsPerSegment.
-    // The sort-based streaming pivot is the default physical strategy; the
-    // salted two-phase variant (SeriesPivot.segmentsSalted) is the explicit
-    // skew escape hatch and produces identical segments (tested).
-    val segTier = sorted.last
-    // the segments are the job's ONLY full read of the raw table: the rollup
-    // cube below decodes them (≈2% of raw bytes) instead of rescanning raw
-    val segsTyped = SeriesPivot.segmentsSorted(turns, segTier, cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val segs = segsTyped.toDF().withColumn("pday", pdayCol)
-    val segsToWrite =
-      if (resume) segs.join(
-        broadcast(committed.filter(col("tier") === s"seg-${segTier.name}")
-          .select("pday")), Seq("pday"), "left_anti")
-      else segs
-    // ≤ writeSaltBuckets files per (tier, pday) partition: without any
-    // repartition every shuffle task writes into every pday dir → files =
-    // partitions × days, and each dynamic-overwrite write pays a full table
-    // listing; with UNSALTED pday partitioning a hot day (one pday holding
-    // most of the data) serializes into a single parquet-writing task — the
-    // write-side analog of north_rule's hot-conversation skew. The salt
-    // bounds both: listing stays O(days × salt), the straggler shrinks by
-    // the salt factor. numPartitions is PINNED (REPARTITION_BY_NUM) so AQE
-    // can't coalesce write parallelism away on small data.
-    val writeParts = spark.sessionState.conf.numShufflePartitions
-    val writeSalt =
-      pmod(xxhash64(col("conv_id")), lit(math.max(1, cfg.writeSaltBuckets)))
-    // ---- overlap discipline (the N→4N fixed-tail shave): table WRITES run
-    // in ONE serialized async chain — never two io.write in flight, so the
-    // session-level dynamic-partition-overwrite conf can't race and replay
-    // ordering (data partitions first, lineage append after) is preserved
-    // per table — while the MAIN thread materializes the next stage's cube
-    // into the cache. Every cube/fold compute overlaps the previous write's
-    // commit + listing tail instead of waiting behind it.
-    timed("segments pivot (materialize)")(segsTyped.count())
-    var writeChain: Future[Any] = Future {
-      timed("segments write")(
-        io.write(segsToWrite.repartition(writeParts, col("pday"), writeSalt),
-          segmentsPath, Seq("tier", "pday"), "overwrite"))
-      Checkpoint.commit(spark, io, cfg.outputRoot, cfg.runId,
-        segsToWrite.select(concat(lit("seg-"), col("tier")).as("tier"), col("pday")),
-        fingerprint)
-    }
-    val segsWrittenF = writeChain.asInstanceOf[Future[Long]]
-
-    // run stats (inputRows + max event time for retention) from the CACHED
-    // segments in ONE fused pass, never the raw table — keeps the job
-    // strictly single-raw-scan under every write mode. Submitted as a
-    // CONCURRENT Spark job (reads only the hot cache), awaited before
-    // retention.
-    val statsF: Future[(Long, Option[Long])] = Future {
-      segsTyped
-        .map(s => (s.n.toLong,
-          Math.floorDiv(graft.codec.Gorilla.decodeTimestamps(s.tsBlob).max, 1000000L)))
-        .toDF("n", "t")
-        .agg(coalesce(sum("n"), lit(0)).cast("long"), max("t"))
-        .as[(Long, Option[Long])].head()
-    }
-
-    // ---- rollup cascade: finest cube decoded from the cached segments,
-    // coarser tiers from the finer cube — raw data is never rescanned.
-    // Each cube is materialized HERE, on the main thread (overlapping the
-    // in-flight write), so the forked write and the next tier never race
-    // to compute a cold cache twice.
-    var finerCube: DataFrame = null
-    val cubes = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val reportFs = sorted.map { tier =>
-      val cube =
-        if (finerCube == null) Rollups.cubeFromSegments(segsTyped, tier)
-        else Rollups.cascadeCube(finerCube, tier)
-      cube.persist()
-      timed(s"cube ${tier.name} materialize")(cube.count())
-      cubes += cube
-      finerCube = cube
-      // streamed fold: cube is (conv_id, bucket)-partitioned, so this is
-      // sort-within-partitions + one typed pass, zero exchanges
-      val points0 = Rollups.pointsStreamed(cube, tier.name)
-        .withColumn("pday", pdayCol)
-      val points = cfg.metricsInclude match {
-        case Some(ms) =>
-          val drop = Seq(
-            "turns" -> Seq("turns"), "byRole" -> Seq("byRole"),
-            "byTool" -> Seq("byTool"),
-            "textLen" -> Seq("textLenSum", "textLenMin", "textLenMax"))
-            .filterNot { case (m, _) => ms.contains(m) }.flatMap(_._2)
-          points0.drop(drop: _*)
-        case None => points0
+    // Everything the job caches or runs off the main thread is tracked so a
+    // failure anywhere leaves no pinned relation and no write still in
+    // flight after run() returns (see the finally below).
+    val cached = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    var writeChain: Future[Any] = Future.unit
+    var statsF: Future[(Long, Option[Long])] = Future.successful((0L, None))
+    try {
+      // ---- segments (the pivot) at the coarsest tier: long segments amortize
+      // per-segment encode cost; memory stays bounded via maxPointsPerSegment.
+      // The sort-based streaming pivot is the default physical strategy; the
+      // salted two-phase variant (SeriesPivot.segmentsSalted) is the explicit
+      // skew escape hatch and produces identical segments (tested).
+      val segTier = sorted.last
+      // the segments are the job's ONLY full read of the raw table: the rollup
+      // cube below decodes them (≈2% of raw bytes) instead of rescanning raw
+      val segsTyped = SeriesPivot.segmentsSorted(turns, segTier, cfg)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cached += segsTyped
+      val segs = segsTyped.toDF().withColumn("pday", pdayCol)
+      val segsToWrite = pending(segs, s"seg-${segTier.name}")
+      // ≤ writeSaltBuckets files per (tier, pday) partition: without any
+      // repartition every shuffle task writes into every pday dir → files =
+      // partitions × days, and each dynamic-overwrite write pays a full table
+      // listing; with UNSALTED pday partitioning a hot day (one pday holding
+      // most of the data) serializes into a single parquet-writing task — the
+      // write-side analog of north_rule's hot-conversation skew. The salt
+      // bounds both: listing stays O(days × salt), the straggler shrinks by
+      // the salt factor. numPartitions is PINNED (REPARTITION_BY_NUM) so AQE
+      // can't coalesce write parallelism away on small data.
+      val writeParts = spark.sessionState.conf.numShufflePartitions
+      val writeSalt =
+        pmod(xxhash64(col("conv_id")), lit(math.max(1, cfg.writeSaltBuckets)))
+      // ---- overlap discipline (the N→4N fixed-tail shave): table WRITES run
+      // in ONE serialized async chain — never two io.write in flight, so the
+      // session-level dynamic-partition-overwrite conf can't race and replay
+      // ordering (data partitions first, lineage append after) is preserved
+      // per table — while the MAIN thread materializes the next stage's cube
+      // into the cache. Every cube/fold compute overlaps the previous write's
+      // commit + listing tail instead of waiting behind it. The chain runs
+      // only data writes and small appends of lineage rows the main thread
+      // already collected: the action that materializes each cache also
+      // yields that stage's per-pday lineage counts.
+      val (segLineage, _) = timed("segments pivot (materialize)")(
+        segsToWrite.groupBy("tier", "pday").agg(count(lit(1)))
+          .as[(String, String, Long)].collect().toSeq
+          .map { case (t, d, n) => (s"seg-$t", d, n) })
+      writeChain = Future {
+        timed("segments write")(
+          io.write(segsToWrite.repartition(writeParts, col("pday"), writeSalt),
+            segmentsPath, Seq("tier", "pday"), "overwrite"))
+        Checkpoint.commitRows(spark, io, cfg.outputRoot, cfg.runId, segLineage,
+          fingerprint)
       }
-      val done =
-        if (resume) Some(committed.filter(col("tier") === tier.name).select("pday"))
-        else None
-      val toWrite = done match {
-        case Some(d) => points.join(broadcast(d), Seq("pday"), "left_anti")
-        case None => points
-      }
-      val skipped = done.map(_.count()).getOrElse(0L)
-      // lineage: points-per-pday == distinct (conv_id, bucket) per pday in
-      // this tier's cube (points() groups by exactly that key)
-      val planned = cube.select("conv_id", "bucket").distinct()
-        .withColumn("pday", pdayCol)
-        .groupBy("pday").agg(count(lit(1)).as("rows"))
-        .withColumn("tier", lit(tier.name))
-        .select("tier", "pday", "rows")
-      val lineageCounts = done match {
-        case Some(d) => planned.join(broadcast(d), Seq("pday"), "left_anti")
-        case None => planned
-      }
-      // single fused pass: fold → pinned repartition → parquet. The points
-      // are NOT cached — lineage counts come from the cached cube, so the
-      // 1m tier's millions of map-typed rows are materialized exactly once,
-      // inside the write job. Chained behind the previous write; a failed
-      // write propagates and skips every later one (serial semantics).
-      val f = writeChain.map { _ =>
-        timed(s"points ${tier.name} write")(
-          io.write(toWrite.repartition(writeParts, col("pday"), writeSalt),
-            pointsPath, Seq("tier", "pday"), "overwrite"))
-        val written = Checkpoint.commitCounts(spark, io, cfg.outputRoot,
-          cfg.runId, lineageCounts, fingerprint)
-        TierReport(tier.name, written, skipped)
-      }
-      writeChain = f
-      f
-    }
+      val segsWrittenF = writeChain.asInstanceOf[Future[Long]]
 
-    // ---- dimension table (O3, the `once`-file analog): conversation-level
-    // attributes written once per run, derived from the coarsest cube (no
-    // extra scan of raw data); broadcast-join side for downstream queries.
-    // The `once` analog requires one TABLE per run, not one file: at
-    // 10^8–10^9 conversations a coalesce(1) would funnel the whole table
-    // through a single task (and cap the upstream aggregate's output
-    // parallelism), so this is a pinned multi-task write like the
-    // points/segments writes. Submitted concurrently — the coarsest cube is
-    // cached and the retention pass below is independent of dims.
-    val dims = finerCube.groupBy("conv_id").agg(
-      sum("c").as("turns_total"),
-      sum("lenSum").as("text_len_total"),
-      min("bucket").as("first_bucket"),
-      max("bucket").as("last_bucket"))
-    val dimsF = writeChain.map { _ =>
-      io.write(dims.repartition(writeParts),
-        s"${cfg.outputRoot}/dims", Seq.empty, "overwrite")
-    }
-    writeChain = dimsF
+      // run stats (inputRows + max event time for retention) from the CACHED
+      // segments in ONE fused pass, never the raw table — keeps the job
+      // strictly single-raw-scan under every write mode. Submitted as a
+      // CONCURRENT Spark job (reads only the hot cache), awaited before
+      // retention.
+      statsF = Future {
+        segsTyped
+          .map(s => (s.n.toLong,
+            Math.floorDiv(graft.codec.Gorilla.decodeTimestamps(s.tsBlob).max, 1000000L)))
+          .toDF("n", "t")
+          .agg(coalesce(sum("n"), lit(0)).cast("long"), max("t"))
+          .as[(Long, Option[Long])].head()
+      }
 
-    // ---- retention: after every points/segments write has landed (the
-    // dims write may still be in flight — different table, no conf overlap)
-    val reports = reportFs.map(Await.result(_, scala.concurrent.duration.Duration.Inf))
-    val segsWritten = Await.result(segsWrittenF, scala.concurrent.duration.Duration.Inf)
-    val (inputRows, maxTsSec) =
-      Await.result(statsF, scala.concurrent.duration.Duration.Inf)
-    val asOf = asOfSec.orElse(maxTsSec).getOrElse(0L)
-    val retained = Retention(spark, io, pointsPath, cfg.tiers, asOf)
-    // segments follow the COARSEST tier's retention (the safe policy:
-    // segments are the decode source for every re-aggregation)
-    Retention(spark, io, segmentsPath, Seq(segTier), asOf)
-    Await.result(dimsF, scala.concurrent.duration.Duration.Inf)
-    segsTyped.unpersist()
-    cubes.foreach(_.unpersist())
-    // tiny control-plane table, but a long-lived session running many
-    // resume jobs would still accumulate one pinned copy per run
-    if (resume) committed.unpersist()
-    Checkpoint.recordMetrics(spark, io, cfg.outputRoot, cfg.runId, "run",
-      Map("input_rows" -> inputRows.toDouble,
-        "segments_written" -> segsWritten.toDouble) ++
-        reports.map(r => s"points_${r.tier}" -> r.written.toDouble))
-    RunReport(cfg.runId, inputRows, reports, segsWritten, retained)
+      // ---- rollup cascade: finest cube decoded from the cached segments,
+      // coarser tiers from the finer cube — raw data is never rescanned.
+      // Each cube is materialized HERE, on the main thread (overlapping the
+      // in-flight write), so the forked write and the next tier never race
+      // to compute a cold cache twice.
+      var finerCube: DataFrame = null
+      val reportFs = sorted.map { tier =>
+        val cube =
+          if (finerCube == null) Rollups.cubeFromSegments(segsTyped, tier)
+          else Rollups.cascadeCube(finerCube, tier)
+        cube.persist()
+        cached += cube
+        finerCube = cube
+        // the materializing action IS the lineage count: points-per-pday ==
+        // distinct (conv_id, bucket) per pday of this tier's cube (the points
+        // fold groups by exactly that key). The cube is already
+        // hash-partitioned on that key, so the distinct adds no exchange.
+        val (lineageRows, _) = timed(s"cube ${tier.name} materialize")(
+          pending(cube.select("conv_id", "bucket").distinct()
+            .withColumn("pday", pdayCol), tier.name)
+            .groupBy("pday").agg(count(lit(1)))
+            .as[(String, Long)].collect().toSeq
+            .map { case (d, n) => (tier.name, d, n) })
+        val skipped = committed.count(_._1 == tier.name).toLong
+        // streamed fold: cube is (conv_id, bucket)-partitioned, so this is
+        // sort-within-partitions + one typed pass, zero exchanges
+        val points0 = Rollups.pointsStreamed(cube, tier.name)
+          .withColumn("pday", pdayCol)
+        val points = cfg.metricsInclude match {
+          case Some(ms) =>
+            val drop = Seq(
+              "turns" -> Seq("turns"), "byRole" -> Seq("byRole"),
+              "byTool" -> Seq("byTool"),
+              "textLen" -> Seq("textLenSum", "textLenMin", "textLenMax"))
+              .filterNot { case (m, _) => ms.contains(m) }.flatMap(_._2)
+            points0.drop(drop: _*)
+          case None => points0
+        }
+        val toWrite = pending(points, tier.name)
+        // single fused pass: fold → pinned repartition → parquet. The points
+        // are NOT cached, so the 1m tier's millions of map-typed rows are
+        // materialized exactly once, inside the write job. Chained behind the
+        // previous write; a failed write propagates and skips every later one
+        // (serial semantics).
+        val f = writeChain.map { _ =>
+          timed(s"points ${tier.name} write")(
+            io.write(toWrite.repartition(writeParts, col("pday"), writeSalt),
+              pointsPath, Seq("tier", "pday"), "overwrite"))
+          val written = Checkpoint.commitRows(spark, io, cfg.outputRoot,
+            cfg.runId, lineageRows, fingerprint)
+          TierReport(tier.name, written, skipped)
+        }
+        writeChain = f
+        f
+      }
+
+      // ---- dimension table (O3, the `once`-file analog): conversation-level
+      // attributes written once per run, derived from the coarsest cube (no
+      // extra scan of raw data); broadcast-join side for downstream queries.
+      // The `once` analog requires one TABLE per run, not one file: at
+      // 10^8–10^9 conversations a coalesce(1) would funnel the whole table
+      // through a single task (and cap the upstream aggregate's output
+      // parallelism), so this is a pinned multi-task write like the
+      // points/segments writes. Submitted concurrently — the coarsest cube is
+      // cached and the retention pass below is independent of dims.
+      val dims = finerCube.groupBy("conv_id").agg(
+        sum("c").as("turns_total"),
+        sum("lenSum").as("text_len_total"),
+        min("bucket").as("first_bucket"),
+        max("bucket").as("last_bucket"))
+      val dimsF = writeChain.map { _ =>
+        io.write(dims.repartition(writeParts),
+          s"${cfg.outputRoot}/dims", Seq.empty, "overwrite")
+      }
+      writeChain = dimsF
+
+      // ---- retention: after every points/segments write has landed (the
+      // dims write may still be in flight — different table, no conf overlap)
+      val reports = reportFs.map(Await.result(_, Duration.Inf))
+      val segsWritten = Await.result(segsWrittenF, Duration.Inf)
+      val (inputRows, maxTsSec) = Await.result(statsF, Duration.Inf)
+      val asOf = asOfSec.orElse(maxTsSec).getOrElse(0L)
+      val retained = Retention(spark, io, pointsPath, cfg.tiers, asOf)
+      // segments follow the COARSEST tier's retention (the safe policy:
+      // segments are the decode source for every re-aggregation)
+      Retention(spark, io, segmentsPath, Seq(segTier), asOf)
+      Await.result(dimsF, Duration.Inf)
+      Checkpoint.recordMetrics(spark, io, cfg.outputRoot, cfg.runId, "run",
+        Map("input_rows" -> inputRows.toDouble,
+          "segments_written" -> segsWritten.toDouble) ++
+          reports.map(r => s"points_${r.tier}" -> r.written.toDouble))
+      RunReport(cfg.runId, inputRows, reports, segsWritten, retained)
+    } finally {
+      // settle (never rethrow: the main thread's error wins) every forked
+      // job before releasing the caches they read; each chain link waits on
+      // the previous one, so the last link settles the whole chain
+      Seq(writeChain, statsF).foreach(Await.ready(_, Duration.Inf))
+      cached.foreach(_.unpersist())
+    }
   }
 
   /** Run several configs in one session with combined accounting — the

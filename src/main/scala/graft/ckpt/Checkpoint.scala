@@ -16,9 +16,17 @@ import org.apache.spark.sql.functions._
   * a crash between the two re-runs that partition, it never records
   * uncommitted data.
   *
+  * The job reads the committed set ONCE per run into driver memory
+  * ([[committedSet]]) and filters planned output against it with plain
+  * `pday IN (...)` predicates; lineage row counts are collected on the
+  * driver by the actions that materialize the job's caches, so a commit
+  * ([[commitRows]]) is one small append of already-local rows. Lineage is
+  * never pruned, so the committed set holds at most tiers × pdays ever
+  * committed — a few thousand pairs for years of daily partitions.
+  *
   * Write modes (CLI parity with `s2srun -m {w,s,o,a}`):
   *   w  error if the output table already exists
-  *   s  skip partitions already committed in lineage (anti-join), write rest
+  *   s  skip partitions already committed in lineage, write the rest
   *   o  overwrite the partitions produced by this run
   *   a  append-only: process only input newer than the committed high-water
   *      mark per tier
@@ -35,7 +43,7 @@ object Checkpoint {
     if (io.exists(spark, path)) Some(io.read(spark, path)) else None
   }
 
-  /** Partitions (tier, pday) already committed — for wmode 's' anti-joins. */
+  /** Partitions (tier, pday) already committed, as a relation. */
   def committed(spark: SparkSession, io: TableIO, root: String): DataFrame =
     lineage(spark, io, root) match {
       case Some(df) => df.select("tier", "pday").distinct()
@@ -44,17 +52,36 @@ object Checkpoint {
         Seq.empty[(String, String)].toDF("tier", "pday")
     }
 
+  /** Partitions (tier, pday) already committed, collected to the driver —
+    * one lineage read per run; bounded by tiers × pdays ever committed.
+    */
+  def committedSet(spark: SparkSession, io: TableIO, root: String): Set[(String, String)] = {
+    import spark.implicits._
+    committed(spark, io, root).as[(String, String)].collect().toSet
+  }
+
   /** Committed high-water mark (max pday) per tier — for wmode 'a'. */
-  def highWater(spark: SparkSession, io: TableIO, root: String): Map[String, String] =
-    lineage(spark, io, root) match {
-      case Some(df) => df.groupBy("tier").agg(max("pday").as("hw"))
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      case None => Map.empty
+  def highWater(committed: Set[(String, String)]): Map[String, String] =
+    committed.groupMapReduce(_._1)(_._2)((a, b) => if (a >= b) a else b)
+
+  /** Append one lineage row per `(tier, pday, rows)` — already-local rows,
+    * written as a single file with no upstream recompute. Called AFTER the
+    * data write succeeds. Returns the total committed row count.
+    */
+  def commitRows(spark: SparkSession, io: TableIO, root: String, runId: String,
+      counts: Seq[(String, String, Long)], fingerprint: String): Long = {
+    import spark.implicits._
+    val at = java.sql.Timestamp.from(java.time.Instant.now())
+    val rows = counts.map { case (tier, pday, n) =>
+      LineageRow(runId, tier, pday, n, at, fingerprint)
     }
+    // control-plane table: single file per commit, not one per shuffle task
+    io.write(rows.toDF().coalesce(1), s"$root/$LineageDir", Seq.empty, "append")
+    counts.map(_._3).sum
+  }
 
   /** Record commits for the partitions present in `written` (must carry
-    * tier + pday columns). Appended AFTER the data write succeeds. Returns
-    * the total committed row count (so callers need no extra action).
+    * tier + pday columns): counts rows per partition, then [[commitRows]].
     */
   def commit(spark: SparkSession, io: TableIO, root: String, runId: String,
       written: DataFrame, fingerprint: String): Long =
@@ -62,26 +89,15 @@ object Checkpoint {
       written.groupBy("tier", "pday").agg(count(lit(1)).as("rows")), fingerprint)
 
   /** Like [[commit]], but the caller supplies the per-(tier, pday) row
-    * counts directly — lets the job derive lineage from an already-cached
-    * upstream relation instead of re-scanning the written data.
+    * counts (columns tier, pday, rows): collects them, then [[commitRows]].
     */
   def commitCounts(spark: SparkSession, io: TableIO, root: String, runId: String,
       counts: DataFrame, fingerprint: String): Long = {
     import spark.implicits._
-    val rows = counts
-      .withColumn("run_id", lit(runId))
-      .withColumn("committed_at", current_timestamp())
-      .withColumn("input_fingerprint", lit(fingerprint))
-      .select("run_id", "tier", "pday", "rows", "committed_at", "input_fingerprint")
-      .cache()
-    val total = rows.agg(sum("rows")).head().get(0) match {
-      case null => 0L
-      case v: Long => v
-    }
-    // control-plane table: single file per commit, not one per shuffle task
-    io.write(rows.coalesce(1), s"$root/$LineageDir", Seq.empty, "append")
-    rows.unpersist()
-    total
+    commitRows(spark, io, root, runId,
+      counts.select(col("tier"), col("pday"), col("rows").cast("long"))
+        .as[(String, String, Long)].collect().toSeq,
+      fingerprint)
   }
 
   /** Append one metrics row per (phase, metric). The engine analog of the

@@ -23,6 +23,18 @@ class ResumeSpec extends SparkSpec {
   private def cfg(out: String, mode: String, runId: String) = RollupConfig(
     inputPath = inputPath, outputRoot = out, writeMode = mode, runId = runId)
 
+  /** A fresh wmode-'o' run over the full input, shared by the resume tests. */
+  private lazy val fresh = {
+    val out = s"$tmp/fresh"
+    RollupJob.run(spark, cfg(out, "o", "run-fresh"))
+    out
+  }
+
+  /** A run's lineage rows `(tier, pday, rows)`, sorted. */
+  private def lineageOf(root: String, runId: String): Seq[(String, String, Long)] =
+    ParquetTableIO.read(spark, s"$root/_lineage").filter(col("run_id") === runId)
+      .select("tier", "pday", "rows").as[(String, String, Long)].collect().toSeq.sorted
+
   private def comparablePoints(root: String): DataFrame =
     ParquetTableIO.read(spark, s"$root/points")
       .withColumn("byRole", array_sort(map_entries(col("byRole"))))
@@ -64,8 +76,7 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("wmode 's' resume: partial then full equals a fresh full run, no recompute") {
-    val outFresh = s"$tmp/fresh"
-    RollupJob.run(spark, cfg(outFresh, "o", "run-fresh"))
+    val outFresh = fresh
 
     // simulate a failed run: only the first UTC day of input was processed
     val days = spark.read.parquet(inputPath)
@@ -92,11 +103,48 @@ class ResumeSpec extends SparkSpec {
     assert(!run2Days.contains(days.head),
       s"run-2 recomputed committed day ${days.head}")
     assert(r2.tiers.forall(_.skipped > 0), "expected skipped partitions")
+
+    // the lineage is unchanged by where its counts come from: run-2 commits
+    // exactly the fresh run's rows of every partition run-1 left uncommitted
+    val run1 = lineageOf(outResume, "run-1").map(r => (r._1, r._2)).toSet
+    val run2Rows = lineageOf(outResume, "run-2")
+    assert(run2Rows.nonEmpty)
+    assert(run2Rows == lineageOf(outFresh, "run-fresh")
+      .filterNot(r => run1((r._1, r._2))), "run-2 lineage != fresh lineage")
+    // skipped counts a tier's committed pdays; written sums its new rows
+    r2.tiers.foreach { t =>
+      assert(t.skipped == run1.count(_._1 == t.tier), s"skipped of ${t.tier}")
+      assert(t.written == run2Rows.filter(_._1 == t.tier).map(_._3).sum,
+        s"written of ${t.tier}")
+    }
+  }
+
+  test("a failed write releases the job's caches; wmode 's' then equals a fresh run") {
+    val out = s"$tmp/crash"
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // the 2nd write is the segments' lineage append, inside the async chain
+    val writes = new java.util.concurrent.atomic.AtomicInteger
+    val failing = new InterceptingIO((path, perform) =>
+      if (writes.incrementAndGet() == 2)
+        throw new java.io.IOException(s"injected failure writing $path")
+      else perform())
+    val err = intercept[java.io.IOException] {
+      RollupJob.run(spark, cfg(out, "o", "run-crash"), io = failing)
+    }
+    assert(err.getMessage.contains("injected"))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"relations left persisted: $leaked")
+
+    RollupJob.run(spark, cfg(out, "s", "run-resume"))
+    assertSameRows(comparablePoints(out), comparablePoints(fresh), "points")
+    Seq("segments", "dims").foreach { t =>
+      assertSameRows(ParquetTableIO.read(spark, s"$out/$t"),
+        ParquetTableIO.read(spark, s"$fresh/$t"), t)
+    }
   }
 
   test("wmode 'a' append: newer days only, final table equals fresh run") {
-    val outFresh = s"$tmp/fresh2"
-    RollupJob.run(spark, cfg(outFresh, "o", "run-fresh2"))
+    val outFresh = fresh
 
     val days = spark.read.parquet(inputPath)
       .select(date_format(col("ts"), "yyyy-MM-dd").as("d")).distinct()

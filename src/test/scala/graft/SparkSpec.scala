@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.{ParquetTableIO, TableIO}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,4 +27,19 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+}
+
+/** Parquet TableIO that passes every write, as `(path, perform)`, to
+  * `onWrite` — so a test can record writes, or fail one instead of
+  * performing it.
+  */
+class InterceptingIO(onWrite: (String, () => Unit) => Unit) extends TableIO {
+  def read(spark: SparkSession, path: String): DataFrame =
+    ParquetTableIO.read(spark, path)
+  def exists(spark: SparkSession, path: String): Boolean =
+    ParquetTableIO.exists(spark, path)
+  def write(df: DataFrame, path: String, partitionCols: Seq[String], mode: String): Unit =
+    onWrite(path, () => ParquetTableIO.write(df, path, partitionCols, mode))
+  def dropPartitions(spark: SparkSession, path: String, predicate: String): Unit =
+    ParquetTableIO.dropPartitions(spark, path, predicate)
 }
